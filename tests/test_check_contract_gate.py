@@ -5,13 +5,15 @@ future loosening of either gate fails loudly."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import check_contract as CC  # noqa: E402
 
@@ -87,14 +89,13 @@ def test_hugeint_sweep_reds_uncast_sum_fixture():
 def test_normalize_array_cells_raise_value_error_class():
     """r15 review pin: numpy-array cells (an ArrayType column — the
     r5 embedding_pca class) raise ValueError from sort_values, not
-    TypeError; the rows-only canonicalization guard must catch BOTH
-    or one bad key aborts the whole multi-key run."""
+    TypeError; compare() must turn that crash into a FAIL for the one
+    key instead of aborting the whole multi-key run."""
     import pytest as _pytest
     df = pd.DataFrame({"a": [np.array([1.0, 2.0]),
                              np.array([0.5, 1.5])]})
     with _pytest.raises((TypeError, ValueError)):
         CC.normalize(df)
-    # and the documented catch covers exactly that class
-    import inspect as _inspect
-    src = _inspect.getsource(CC.main)
-    assert "(TypeError, ValueError)" in src
+    problems = CC.compare("fixture", df, df.copy())
+    assert any("driver canon would crash" in p for p in problems), \
+        problems

@@ -1,7 +1,10 @@
 """Local replica of the driver's correctness gate: run every
 ``__spark_entry__.queries()`` entry at the given SF and compare against
 ``oracle_sql()`` via DuckDB — row count, schema (column names sorted),
-and order-insensitive values.
+and order-insensitive values.  A run on the certification corpus (the
+default ``sf_dir``) records a ``{fp, ok, problem}`` row per key it ran
+in ``tools/contract_evidence.json``, keyed by the code fingerprint that
+``tools/check_freshness.py`` gates on.
 
 Usage: python tools/check_contract.py [sf_dir] [key ...]
 """
@@ -9,6 +12,8 @@ Usage: python tools/check_contract.py [sf_dir] [key ...]
 from __future__ import annotations
 
 import datetime as _dt
+import json
+import os
 import sys
 import time
 
@@ -16,7 +21,9 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+from check_freshness import CORPUS, EVIDENCE, REPO, fingerprints, load_rows
+
+sys.path.insert(0, REPO)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -119,8 +126,27 @@ def compare(key: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[str
     return problems
 
 
+def check_key(key: str, fn, oracle: str | None, spark,
+              con: duckdb.DuckDBPyConnection, sf_dir: str
+              ) -> tuple[list[str], pd.DataFrame | None,
+                         pd.DataFrame | None]:
+    """(problems, spark frame, duck frame) for one key; a frame is None
+    when its side never produced one."""
+    try:
+        sdf = fn(spark, sf_dir).toPandas()
+    except Exception as exc:
+        return [f"spark raised {type(exc).__name__}: {exc}"], None, None
+    if oracle is None:
+        return ["no oracle_sql() twin"], sdf, None
+    try:
+        ddf = con.sql(oracle).df()
+    except Exception as exc:
+        return [f"duckdb raised {type(exc).__name__}: {exc}"], sdf, None
+    return compare(key, sdf, ddf), sdf, ddf
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else CORPUS
     only = set(sys.argv[2:])
 
     import __spark_entry__ as E
@@ -132,7 +158,8 @@ def main() -> int:
     # accumulate unboundedly (ADVICE r8) — sweep them like every other
     # run-* dir (a dump survives until the NEXT contract run, which is
     # the window it gets inspected in)
-    _sweep_stale_dirs("/root/repo/.scratch/failures")
+    failures = os.path.join(REPO, ".scratch", "failures")
+    _sweep_stale_dirs(failures)
 
     qs, oracles = E.queries(), E.oracle_sql()
     unknown = sorted(k for k in only if k not in qs)
@@ -143,68 +170,54 @@ def main() -> int:
         # guard this class)
         print(f"unknown key(s): {unknown} — not in queries()")
         return 2
+    # fingerprint the code as loaded, before a multi-minute run
+    record = os.path.realpath(sf_dir) == os.path.realpath(CORPUS)
+    fps = fingerprints() if record else {}
 
     spark = get_spark("check-contract")
     con = duck_con(sf_dir)
 
-    n_fail = 0
+    rows = {}
     for key, fn in qs.items():
         if only and key not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as exc:
-            print(f"FAIL {key}: spark raised {type(exc).__name__}: {exc}")
-            n_fail += 1
-            continue
-        if key not in oracles:
-            # the driver canonicalizes rows-only outputs too (r5's
-            # embedding_pca ERR was a rows-only key) — so must we
-            try:
-                normalize(sdf)
-            except (TypeError, ValueError) as exc:
-                # ValueError too: numpy-array cells (an ArrayType
-                # column — the r5 embedding_pca class this guard
-                # exists for) raise ValueError from sort_values, not
-                # TypeError, and aborted the whole run (r15 review)
-                print(f"FAIL {key}: driver canon would crash: {exc}")
-                n_fail += 1
-                continue
-            print(f"ok   {key}: rows-only, {len(sdf)} rows "
+        problems, sdf, ddf = check_key(key, fn, oracles.get(key), spark,
+                                       con, sf_dir)
+        rows[key] = {"fp": fps.get(key), "ok": not problems,
+                     "problem": "; ".join(problems)[:500] or None}
+        if not problems:
+            print(f"ok   {key}: {len(sdf)} rows match "
                   f"({time.time() - t0:.1f}s)")
             continue
-        try:
-            ddf = con.sql(oracles[key]).df()
-        except Exception as exc:
-            print(f"FAIL {key}: duckdb raised {type(exc).__name__}: {exc}")
-            n_fail += 1
+        print(f"FAIL {key} ({time.time() - t0:.1f}s)")
+        for p in problems:
+            print(f"     {p}")
+        if ddf is None:
             continue
-        problems = compare(key, sdf, ddf)
-        if problems:
-            n_fail += 1
-            print(f"FAIL {key} ({time.time() - t0:.1f}s)")
-            for p in problems:
-                print(f"     {p}")
-            # dump both frames — transient failures (contention flakes)
-            # are undiagnosable without the exact frame that mismatched.
-            # Per-pid dir: a contention flake implies a CONCURRENT run,
-            # which may fail on the same key and clobber this evidence
-            import os
-            dump = f"/root/repo/.scratch/failures/run-{os.getpid()}"
-            os.makedirs(dump, exist_ok=True)
-            try:
-                sdf.to_parquet(f"{dump}/{key}.spark.parquet")
-                ddf.to_parquet(f"{dump}/{key}.duck.parquet")
-                print(f"     frames dumped to {dump}/{key}.*.parquet")
-            except Exception as exc:  # arrays etc. — best effort
-                print(f"     (dump failed: {exc})")
-        else:
-            print(f"ok   {key}: {len(sdf)} rows match ({time.time() - t0:.1f}s)")
+        # dump both frames — transient failures (contention flakes)
+        # are undiagnosable without the exact frame that mismatched.
+        # Per-pid dir: a contention flake implies a CONCURRENT run,
+        # which may fail on the same key and clobber this evidence
+        dump = os.path.join(failures, f"run-{os.getpid()}")
+        os.makedirs(dump, exist_ok=True)
+        try:
+            sdf.to_parquet(f"{dump}/{key}.spark.parquet")
+            ddf.to_parquet(f"{dump}/{key}.duck.parquet")
+            print(f"     frames dumped to {dump}/{key}.*.parquet")
+        except Exception as exc:  # arrays etc. — best effort
+            print(f"     (dump failed: {exc})")
+    if record:
+        evidence = {k: v for k, v in load_rows().items() if k in qs}
+        evidence.update(rows)
+        with open(EVIDENCE, "w") as f:
+            json.dump(evidence, f, indent=1, sort_keys=True)
+        print(f"# {len(rows)} contract row(s) recorded in {EVIDENCE}")
     # writer-debris canary (r9 VERDICT #7): same sweep bench.py records
     import bench as _bench
     seen, dirs = _bench.sweep_writer_debris(E.SCRATCH)
     print(f"# orphan_dirs_seen={seen}" + (f" {dirs}" if dirs else ""))
+    n_fail = sum(not r["ok"] for r in rows.values())
     print(f"\n{'ALL OK' if n_fail == 0 else f'{n_fail} FAILURES'}")
     return 1 if n_fail else 0
 
