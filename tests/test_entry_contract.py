@@ -190,19 +190,38 @@ def test_no_hugeint_oracle_columns():
         f"CAST(... AS BIGINT)): {offenders}")
 
 
-def test_freshness_rule_on_synthetic_rows():
-    """A key passes only with a green row under its current
-    fingerprint: a missing row, a red row, a green row under an old
-    fingerprint and a green row under another environment all fail."""
+def test_freshness_slack_and_never_green_semantics():
+    """The gate has no slack: a never-green key (no row) fails, a
+    green row under an older fingerprint fails, and a green row under
+    the current fingerprint passes however long ago it was written."""
     CF = _freshness()
-    fps = {"missing": "a", "red": "b", "old": "c", "fine": "d"}
-    rows = {"red": {"fp": "b", "ok": False, "problem": "rowcount"},
-            "old": {"fp": "OLD", "ok": True, "problem": None},
-            "fine": {"fp": "d", "ok": True, "problem": None}}
+    fps = {"nevergreen": "a", "textnew": "b", "oldgreen": "c"}
+    rows = {"textnew": {"fp": "OLD", "ok": True, "problem": None},
+            "oldgreen": {"fp": "c", "ok": True, "problem": None}}
     bad = CF.stale(fps, rows)
-    assert sorted(bad) == ["missing", "old", "red"], bad
-    assert bad["red"] == "red: rowcount"
+    assert sorted(bad) == ["nevergreen", "textnew"], bad
+    assert bad["nevergreen"] == "no contract row"
 
+
+def test_freshness_flags_red_regression_after_old_green():
+    """A key whose latest contract run is red fails even though it was
+    green before: check_contract.py replaces a key's row on each run,
+    so the older green row no longer counts."""
+    CF = _freshness()
+    fps = {"regressed": "f", "fine": "g"}
+    rows = {"regressed": {"fp": "f", "ok": True, "problem": None},
+            "fine": {"fp": "g", "ok": True, "problem": None}}
+    assert CF.stale(fps, rows) == {}
+    rows.update({"regressed": {"fp": "f", "ok": False,
+                               "problem": "rowcount"}})
+    assert CF.stale(fps, rows) == {"regressed": "red: rowcount"}
+
+
+def test_freshness_environment_change_reopens_every_key():
+    """Green rows written under one environment count for none of the
+    keys once the environment (python/pyspark/duckdb versions or the
+    sf0.01 corpus) changes."""
+    CF = _freshness()
     current = CF.fingerprints(env="env-a")
     green = {k: {"fp": fp, "ok": True, "problem": None}
              for k, fp in current.items()}
