@@ -25,7 +25,6 @@ from .sources.read import (
     read_fixed_width,
     read_partitioned,
     read_payload,
-    read_table_view,
 )
 
 __all__ = [
@@ -35,6 +34,6 @@ __all__ = [
     "list_existing_partitions", "spark_avro_available",
     "merge_upsert", "merge_cdc", "read_cdc_table", "compact_tombstones",
     "compact_partitions",
-    "read_partitioned", "read_payload", "read_table_view",
+    "read_partitioned", "read_payload",
     "read_fixed_width",
 ]

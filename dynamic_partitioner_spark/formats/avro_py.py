@@ -359,14 +359,6 @@ def decode_container(data: bytes) -> tuple[T.StructType, list[tuple]]:
 
 # ---------------------------------------------------- distributed write
 
-def _hive_dir(field_names: list[str], key: tuple) -> str:
-    # Same Hive escapePathName spelling as the spark-avro fast path, so
-    # a partition written by either writer reads back as ONE logical
-    # partition (urllib quote produced %20-style variants — ADVICE r2)
-    from ..functions.paths import hive_partition_path
-    return hive_partition_path(field_names, key)
-
-
 def write_avro_partitioned(df: DataFrame, field_names: list[str],
                            path: str, codec: str = "deflate",
                            overwrite_partitions: bool = False) -> str:
@@ -379,22 +371,32 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
     task — acceptable for the fallback path; the spark-avro fast path
     handles skew via REBALANCE in ``write_partitioned``.
 
-    ``overwrite_partitions`` gives the fallback the same dynamic-
-    overwrite semantics as the parquet/orc path: partition dirs present
-    in the incoming data are moved aside (``._overwrite_old``), the
-    write runs, then the old dirs are deleted; a failed write restores
-    them.  The distinct-keys collect is bounded by the partition count
-    (same documented pattern as the CREATE existence check).  The
-    fallback writer requires a POSIX-visible output path on all
-    executors (it already writes through the local file API).
+    Commit discipline is Spark's own ``FileFormatWriter`` one: tasks
+    write into a hidden staging tree ``<path>/.avro-staging-<token>/``
+    (a dot-directory, so every reader's listing skips it), and only
+    after the job succeeds does the driver commit the partitions the
+    job reported writing.  Append moves each new file into its live
+    partition dir; ``overwrite_partitions`` (dynamic overwrite — only
+    the incoming partitions are replaced) moves each live partition
+    dir into the staging tree and renames the new one into place.  The
+    staging tree is then deleted.  A failed job deletes the staging
+    tree and never touched the live one; a crash during the commit
+    leaves the staging tree holding the new output and any partition
+    it was replacing.  The fallback writer requires a POSIX-visible
+    output path on all executors (it writes through the local file
+    API).
     """
+    import shutil
+    import uuid
+
     import pandas as pd
+
+    from ..functions.paths import hive_partition_path
 
     if codec not in ("null", "deflate"):
         raise ValueError(
             f"pure-Python avro writer supports codecs null/deflate, not "
             f"{codec!r}; install the spark-avro connector for {codec}")
-    import uuid
 
     payload_schema = T.StructType(
         [f for f in df.schema.fields if f.name not in field_names])
@@ -404,8 +406,9 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
     # ATTEMPT for a partition writes the same deterministic file name,
     # so a task retry / speculative attempt overwrites its own partial
     # file instead of appending a duplicate; separate append jobs get
-    # fresh tokens and coexist
+    # fresh tokens (and staging trees) and coexist
     job_token = uuid.uuid4().hex[:12]
+    staging = os.path.join(path, f".avro-staging-{job_token}")
     float_cols = [f.name for f in payload_schema.fields
                   if isinstance(f.dataType, (T.DoubleType, T.FloatType))]
     # nullable integer columns need the same mask treatment: Arrow
@@ -424,64 +427,17 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
         # a real payload column named '__null_x' would duplicate the
         # mask's label and crash pandas inside the per-group writer
         # (duplicate-label indexing) — refuse loudly up front, the
-        # partitioned_write '_stage' clash pattern (r15 review).
-        # BEFORE the move-aside below: raising after it would strand
-        # every moved partition invisible with nothing written
-        # (r15 diff review)
+        # partitioned_write '_stage' clash pattern (r15 review)
         raise ValueError(
             f"columns {[f'__null_{c}' for c in clash]} collide with "
             "the writer's internal null-mask labels; rename them")
 
-    moved: list[tuple[str, str]] = []
-    collected_rels: set[str] = set()
-    if overwrite_partitions:
-        keys = [tuple(str(r[f]) for f in field_names)
-                for r in df.select(*field_names).distinct().collect()]
-        # PHASE 1 — validate every target before renaming ANY: the old
-        # single pass raised on a leftover AFTER renaming earlier keys
-        # aside, stranding them invisible to readers with nothing
-        # written (r15 review)
-        renames: list[tuple[str, str]] = []
-        for key in keys:
-            rel = _hive_dir(field_names, key)
-            collected_rels.add(rel)
-            target = os.path.join(path, rel)
-            if os.path.isdir(target):
-                old = target.rstrip("/") + "._overwrite_old"
-                if os.path.isdir(old):
-                    # leftover from a crashed run: it may hold the ONLY
-                    # good copy of this partition (the live dir could be
-                    # a partial rewrite) — deciding which to keep needs
-                    # an operator, not an rmtree (r13 review)
-                    raise RuntimeError(
-                        f"{old} already exists — a previous overwrite "
-                        f"crashed mid-swap.  Inspect it against "
-                        f"{target}, keep the good copy at {target}, "
-                        "delete the other, then re-run")
-                renames.append((target, old))
-        # PHASE 2 — rename, rolling back on any OS failure so a
-        # partial move-aside never hides live partitions
-        try:
-            for target, old in renames:
-                os.rename(target, old)
-                moved.append((target, old))
-        except OSError:
-            for target, old in reversed(moved):
-                os.rename(old, target)
-            raise
-
     def write_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        rel = _hive_dir(field_names, key)
-        if any(seg.endswith("._overwrite_old") for seg in rel.split("/")):
-            # a legitimate VALUE ending in the move-aside marker would
-            # collide with the crash-recovery scheme: its files are
-            # excluded from every read (list_avro_containers filters
-            # the marker) and overwrites of the sibling value are
-            # spuriously refused as crashed swaps (r15 review)
-            raise ValueError(
-                f"partition directory {rel!r} ends with the reserved "
-                "overwrite marker '._overwrite_old'; rename the value")
-        target = os.path.join(path, rel)
+        # same Hive escapePathName spelling as the spark-avro fast
+        # path, so a partition written by either writer reads back as
+        # ONE logical partition
+        rel = hive_partition_path(field_names, key)
+        target = os.path.join(staging, rel)
         os.makedirs(target, exist_ok=True)
         rel_md5 = hashlib.md5(rel.encode())
         sync = rel_md5.digest()
@@ -532,115 +488,47 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
     stats = (masked.groupBy(*field_names)
              .applyInPandas(write_group, out_schema))
     try:
-        # materialize = run the write; the per-partition rows are the
-        # ground truth of what the write ACTUALLY produced, which the
-        # overwrite reconciliation below compares against the pre-write
-        # key scan (the relation is partition-sized, not row-sized)
-        written_rels = {r["partition"] for r in stats.collect()}
-    except Exception:
-        # remove THIS job's own partial output: succeeded tasks'
-        # files are token-unique, and a caller's whole-call retry
-        # would otherwise duplicate every one of their rows (r13
-        # review).  glob.escape: the tree path is caller-supplied.
-        import glob as _glob
-        for f in _glob.glob(os.path.join(_glob.escape(path), "**",
-                                         f"part-*-{job_token}.avro"),
-                            recursive=True):
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        if moved:                          # failed overwrite: restore
-            import shutil
-            for target, old in moved:
-                shutil.rmtree(target, ignore_errors=True)
-                if os.path.isdir(old):
-                    os.rename(old, target)
+        # materialize = run the write; the per-partition rows name
+        # exactly the partitions the job produced, so the commit below
+        # replaces what was written — nothing else
+        written = sorted({r["partition"] for r in stats.collect()})
+    except BaseException:
+        # succeeded tasks' files live only in the staging tree: the
+        # live tree was never touched, and a caller's whole-call retry
+        # cannot duplicate their rows
+        shutil.rmtree(staging, ignore_errors=True)
         raise
-    if overwrite_partitions:
-        _reconcile_overwrite(path, moved, collected_rels, written_rels,
-                             job_token)
+    replaced = os.path.join(staging, "replaced")
+    for rel in written:
+        new, live = os.path.join(staging, rel), os.path.join(path, rel)
+        if not os.path.isdir(live):
+            os.makedirs(os.path.dirname(live), exist_ok=True)
+            os.rename(new, live)
+        elif overwrite_partitions:
+            # 'replaced' has no '=', so it cannot collide with a k=v dir
+            os.makedirs(os.path.dirname(os.path.join(replaced, rel)),
+                        exist_ok=True)
+            os.rename(live, os.path.join(replaced, rel))
+            os.rename(new, live)
+        else:
+            for fn in os.listdir(new):     # token-unique file names
+                os.rename(os.path.join(new, fn), os.path.join(live, fn))
+    shutil.rmtree(staging, ignore_errors=True)
     return path
-
-
-def _reconcile_overwrite(path: str, moved: list[tuple[str, str]],
-                         collected_rels: set[str],
-                         written_rels: set[str],
-                         job_token: str) -> None:
-    """Reconcile an overwrite's pre-write key scan against what the
-    write job actually produced: the two are separate evaluations of
-    the input DataFrame, and a non-deterministic input (rand-derived
-    key, source changing between jobs) makes them diverge — both
-    directions were SILENT corruption before (r15 review): a key that
-    vanished lost its live copy (moved aside, nothing written,
-    move-aside deleted), a key that appeared mixed old and new files
-    in one directory.  Now: vanished keys restore their live copy,
-    the move-aside copies of genuinely replaced partitions are
-    deleted (finalizing them — they are consistent regardless), and
-    an appeared-on-top-of-existing-files key then raises with both
-    of ITS generations intact."""
-    import shutil
-    for target, old in list(moved):
-        rel = os.path.relpath(target, path)
-        if rel not in written_rels:
-            # key vanished between scan and write: nothing replaced
-            # the live copy — restore it, never delete.  A failed or
-            # speculative task attempt may have left a PARTIAL target
-            # dir holding only this job's token-named files (the task
-            # ran write_group, then the stage retry re-evaluated the
-            # key away) — clear that debris so the rename cannot die
-            # ENOTEMPTY and strand the live copy aside; anything NOT
-            # this job's refuses loudly instead (r15 diff review)
-            if os.path.isdir(target):
-                foreign = [fn for fn in os.listdir(target)
-                           if not fn.endswith(f"-{job_token}.avro")]
-                if foreign:
-                    raise RuntimeError(
-                        f"cannot restore {old} over {target}: the "
-                        f"target holds files {sorted(foreign)[:5]} "
-                        "not written by this job — inspect and merge "
-                        "by hand")
-                shutil.rmtree(target)
-            os.rename(old, target)
-            moved.remove((target, old))
-    # delete the move-aside copies of the VERIFIED-replaced
-    # partitions BEFORE the grown check can raise: those partitions
-    # are consistent (scanned, rewritten by this job), and leaving
-    # their old copies behind would make every later overwrite of
-    # them refuse as a crashed swap (r15 diff review)
-    for _, old in moved:
-        shutil.rmtree(old, ignore_errors=True)
-    grown = [rel for rel in written_rels
-             if rel not in collected_rels
-             and any(not fn.endswith(f"-{job_token}.avro")
-                     for fn in os.listdir(os.path.join(path, rel))
-                     if fn.endswith(".avro"))]
-    if grown:
-        raise RuntimeError(
-            f"overwrite wrote partition(s) {sorted(grown)} that "
-            "were absent from the pre-write key scan, on top of "
-            "pre-existing files (non-deterministic input "
-            "DataFrame?) — old and new files now coexist there; "
-            f"inspect and remove one generation (new files match "
-            f"part-*-{job_token}.avro); all other partitions were "
-            "replaced consistently")
 
 
 # ----------------------------------------------------- distributed read
 
 def list_avro_containers(spark, path: str):
     """The ONE binaryFile listing for .avro containers under a tree:
-    recursive, '*.avro'-globbed, excluding any crashed overwrite's
-    '._overwrite_old/' move-aside dir (whose files would parse a
-    mangled partition value out of the path).  Shared by the
-    distributed reader below and sources.read's header-sampling
-    fallback so the exclusion predicate cannot desynchronize
-    (r14 review)."""
+    recursive and '*.avro'-globbed.  Spark's file index skips '.'- and
+    '_'-prefixed entries, so a crashed write's ``.avro-staging-*``
+    tree stays invisible.  Shared by the distributed reader below and
+    sources.read's header-sampling fallback."""
     return (spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.avro")
             .option("recursiveFileLookup", "true")
-            .load(path)
-            .where(~F.col("path").contains("._overwrite_old/")))
+            .load(path))
 
 
 def read_avro_partitioned(spark: SparkSession, path: str,

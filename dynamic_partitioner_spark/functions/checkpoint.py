@@ -26,19 +26,19 @@ from pyspark.sql import DataFrame
 RELIABLE_CHECKPOINT_CONF = "spark.dynamic_partitioner.reliableCheckpoint"
 
 
-def checkpoint_df(df: DataFrame, eager: bool = True) -> DataFrame:
+def checkpoint_df(df: DataFrame) -> DataFrame:
     """Cut ``df``'s lineage: ``localCheckpoint`` by default, a
     RELIABLE ``checkpoint`` when the session sets
     :data:`RELIABLE_CHECKPOINT_CONF` to ``true``.
 
-    With ``eager=True`` (every current caller) the upstream executes
-    NOW — the caller is about to fan the result into several
-    consumers, so the cut is what stops the upstream re-running per
-    branch.  Reliable mode requires ``setCheckpointDir`` — Spark
-    raises its own descriptive error if unset.
+    The cut is eager: the upstream executes NOW — the caller is about
+    to fan the result into several consumers, so the cut is what stops
+    the upstream re-running per branch.  Reliable mode requires
+    ``setCheckpointDir`` — Spark raises its own descriptive error if
+    unset.
     """
     reliable = df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF,
                                         "false")
     if str(reliable).lower() == "true":
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -137,30 +137,53 @@ def list_existing_partitions(spark: SparkSession, base_path: str,
     return found
 
 
+def _sink_frame(df: DataFrame, spec: SinkSpec) -> DataFrame:
+    """The sink prep shared by the batch and streaming writers:
+    validate ``spec`` against ``df``, normalize the partition keys,
+    and add the opt-in stage-tag column."""
+    spec.validate(df.schema)
+    ndf = normalize_partition_keys(df, spec.field_names)
+    if spec.stage_name is None:
+        return ndf
+    if STAGE_FIELD in ndf.columns:
+        # withColumn would silently OVERWRITE a caller's own _stage
+        # payload column with the literal stage name (and merge
+        # rewrites would re-stamp kept rows) — raise like the _z and
+        # derived-name clash paths do (r15 review)
+        raise SpecError(
+            f"input already has a column named {STAGE_FIELD!r}; "
+            "stage tagging would overwrite it — rename the "
+            "column or unset stage_name")
+    return ndf.withColumn(STAGE_FIELD, F.lit(spec.stage_name))
+
+
+def _setup_writer(writer, spec: SinkSpec):
+    """Format, file-size cap, partition layout and format options on a
+    ``DataFrameWriter`` or ``DataStreamWriter`` (same builder API)."""
+    writer = (writer.format(spec.fmt)
+              .option("maxRecordsPerFile", str(spec.max_records_per_file))
+              .partitionBy(*spec.field_names))
+    for k, v in spec.writer_options().items():
+        writer = writer.option(k, v)
+    return writer
+
+
 def write_partitioned(df: DataFrame, spec: SinkSpec, path: str | None = None) -> str:
     """Validate, normalize keys, and write ``df`` Hive-partitioned.
 
     Returns the output path.  Raises :class:`~..spec.SpecError` on bad
     config and :class:`PartitionExistsError` in CREATE mode when an
     incoming key already exists (reference ``PartitionAlreadyExistsException``
-    semantics via the CREATE write option).
+    semantics via the CREATE write option).  ``overwrite_partitions``
+    sets the per-write ``partitionOverwriteMode=dynamic`` option, so
+    only the incoming partitions are replaced whatever the session
+    default is, and the session conf is never touched.  The avro
+    fallback commits the same way through a staging tree (see
+    :func:`~..formats.avro_py.write_avro_partitioned`).
     """
-    spec.validate(df.schema)
     out = path or spec.base_path or spec.name
     spark = df.sparkSession
-
-    ndf = normalize_partition_keys(df, spec.field_names)
-    if spec.stage_name is not None:
-        if STAGE_FIELD in ndf.columns:
-            # withColumn would silently OVERWRITE a caller's own
-            # _stage payload column with the literal stage name (and
-            # merge rewrites would re-stamp kept rows) — raise like
-            # the _z and derived-name clash paths do (r15 review)
-            raise SpecError(
-                f"input already has a column named {STAGE_FIELD!r}; "
-                "stage tagging would overwrite it — rename the "
-                "column or unset stage_name")
-        ndf = ndf.withColumn(STAGE_FIELD, F.lit(spec.stage_name))
+    ndf = _sink_frame(df, spec)
 
     if not spec.mode_is_append and not spec.overwrite_partitions:
         # O(|incoming|) existence probes, not a full partition walk
@@ -205,26 +228,13 @@ def write_partitioned(df: DataFrame, spec: SinkSpec, path: str | None = None) ->
             *[F.col(c) for c in spec.field_names],
             *[F.col(c) for c in spec.sort_within])
 
-    mode = "overwrite" if spec.overwrite_partitions else "append"
-    overwrite_conf = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(overwrite_conf, "static")
+    writer = _setup_writer(ndf.write, spec)
     if spec.overwrite_partitions:
-        # ensure only incoming partitions are replaced even if the
-        # session default was changed (engine conf sets dynamic
-        # already); restored below — a session-wide flip would change
-        # the semantics of the USER's own later overwrite writes
-        spark.conf.set(overwrite_conf, "dynamic")
-    try:
-        writer = (ndf.write.mode(mode)
-                  .option("maxRecordsPerFile", str(spec.max_records_per_file))
-                  .partitionBy(*spec.field_names)
-                  .format(spec.fmt))
-        for k, v in spec.writer_options().items():
-            writer = writer.option(k, v)
-        writer.save(out)
-    finally:
-        if spec.overwrite_partitions:
-            spark.conf.set(overwrite_conf, prev_mode)
+        writer = (writer.mode("overwrite")
+                  .option("partitionOverwriteMode", "dynamic"))
+    else:
+        writer = writer.mode("append")
+    writer.save(out)
     return out
 
 

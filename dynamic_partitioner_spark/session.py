@@ -10,6 +10,7 @@ few Pandas-UDF paths, and bounded files-per-scan-partition.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -180,3 +181,24 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
         except Exception:  # static conf on this build — keep going
             pass
     return spark
+
+
+@contextmanager
+def _conf_override(spark: SparkSession, key: str, value: str | None):
+    """Set a session SQL conf for the block, restoring (or unsetting,
+    if it was unset) on exit.  THE one save/restore implementation for
+    the package — hand-rolled copies had drifted in their save idioms
+    (get-with-default vs bare get vs try/except) and restore idioms
+    (set vs unset-or-set).  ``value=None`` is a no-op."""
+    if value is None:
+        yield
+        return
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

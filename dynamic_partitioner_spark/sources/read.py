@@ -13,23 +13,12 @@ partition-column type re-inference for the read.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import _conf_override
 from ..spec import SinkSpec
 
 _INFER = "spark.sql.sources.partitionColumnTypeInference.enabled"
-
-
-@contextmanager
-def _no_partition_type_inference(spark: SparkSession):
-    old = spark.conf.get(_INFER, "true")
-    spark.conf.set(_INFER, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(_INFER, old)
 
 
 def read_partitioned(spark: SparkSession, path: str,
@@ -63,7 +52,7 @@ def read_partitioned(spark: SparkSession, path: str,
                     "schema); install spark-avro or read each "
                     "schema generation separately")
             return _read_avro_fallback(spark, path)
-    with _no_partition_type_inference(spark):
+    with _conf_override(spark, _INFER, "false"):
         reader = spark.read.format(fmt)
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
@@ -97,11 +86,6 @@ def _read_avro_fallback(spark: SparkSession, path: str) -> DataFrame:
         raise FileNotFoundError(f"no .avro container files under {path}")
     payload_schema, _ = decode_container(bytes(one[0].content))
     return read_avro_partitioned(spark, path, order, payload_schema)
-
-
-def read_table_view(spark: SparkSession, path: str, spec: SinkSpec) -> DataFrame:
-    """Full logical relation: payload + string partition columns."""
-    return read_partitioned(spark, path, spec.fmt)
 
 
 def read_payload(spark: SparkSession, path: str, spec: SinkSpec) -> DataFrame:

@@ -24,7 +24,7 @@ here: each knob maps to its correct writer option.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
@@ -92,7 +92,6 @@ class SinkSpec:
     #: inserts its own UNSTABLE sort on the partition columns and any
     #: incoming row order is lost.
     sort_within: list[str] | None = None
-    extra_options: dict[str, str] = field(default_factory=dict)
 
     @property
     def mode_is_append(self) -> bool:
@@ -184,7 +183,7 @@ class SinkSpec:
 
     def writer_options(self) -> dict[str, str]:
         """Format-specific writer options (codec + ORC knobs, bugs fixed)."""
-        opts: dict[str, str] = dict(self.extra_options)
+        opts: dict[str, str] = {}
         codec = (self.compression_codec or "").lower()
         if codec:
             mapped = CODECS[self.fmt][codec]

@@ -533,14 +533,10 @@ def run_ttl_eviction_audit(spark: SparkSession, src_path: str,
     eviction results are provider-invariant — pinned in
     tests/test_streaming.py.
     """
+    from ..session import _conf_override
     from .write import (run_stream_to_completion, shuffle_partitions,
                         state_store_provider, stream_from_files)
 
-    from .write import _conf_override
-
-    # the ONE save/restore implementation (r13 collapsed three
-    # divergent copies into _conf_override; this was a fourth
-    # hand-rolled one — r14 review)
     with _conf_override(spark,
                         "spark.sql.streaming.noDataMicroBatches.enabled",
                         "false"), \

@@ -21,27 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-
-@contextmanager
-def _conf_override(spark: SparkSession, key: str, value: str | None):
-    """Set a session SQL conf for the block, restoring (or unsetting,
-    if it was unset) on exit.  THE one save/restore implementation —
-    this file had grown three divergent copies whose save idioms
-    (get-with-default vs bare get vs try/except) and restore idioms
-    (set vs unset-or-set) had already drifted (r13 review).
-    ``value=None`` is a no-op."""
-    if value is None:
-        yield
-        return
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+from ..session import _conf_override
 
 
 @contextmanager
@@ -137,8 +117,7 @@ def micro_batch_aqe_fanout(spark: SparkSession, n: int | None = 64):
         yield
 
 
-from ..operators.partition_keys import normalize_partition_keys
-from ..operators.partitioned_write import STAGE_FIELD
+from ..operators.partitioned_write import _setup_writer, _sink_frame
 from ..spec import SinkSpec
 
 
@@ -262,7 +241,7 @@ def stream_write_partitioned(sdf: DataFrame, spec: SinkSpec, path: str,
     ``sortWithinPartitions`` equivalent on an unbounded source.  Use
     the batch sink (via ``foreachBatch``) for those semantics.
     """
-    spec.validate(sdf.schema)
+    ndf = _sink_frame(sdf, spec)
     if not spec.mode_is_append:
         raise ValueError(
             "stream_write_partitioned cannot honor CREATE mode "
@@ -278,27 +257,9 @@ def stream_write_partitioned(sdf: DataFrame, spec: SinkSpec, path: str,
         raise ValueError(
             "stream_write_partitioned cannot honor sort_within — "
             "route through foreachBatch + write_partitioned")
-    ndf = normalize_partition_keys(sdf, spec.field_names)
-    if spec.stage_name is not None:
-        if STAGE_FIELD in ndf.columns:
-            # mirror the batch path's clash guard (r15 review: the
-            # same SinkSpec raised SpecError through
-            # write_partitioned but silently overwrote the caller's
-            # _stage payload column here — divergent semantics,
-            # silent data loss on the streaming path)
-            from ..spec import SpecError
-            raise SpecError(
-                f"input already has a column named {STAGE_FIELD!r}; "
-                "stage tagging would overwrite it — rename the "
-                "column or unset stage_name")
-        ndf = ndf.withColumn(STAGE_FIELD, F.lit(spec.stage_name))
-    writer = (ndf.writeStream.format(spec.fmt)
+    writer = (_setup_writer(ndf.writeStream, spec)
               .option("checkpointLocation", checkpoint)
-              .option("maxRecordsPerFile", str(spec.max_records_per_file))
-              .partitionBy(*spec.field_names)
               .outputMode("append"))
-    for k, v in spec.writer_options().items():
-        writer = writer.option(k, v)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start(path)

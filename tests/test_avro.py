@@ -351,137 +351,126 @@ def test_failed_write_cleans_its_own_partials(spark, tmp_path,
     assert read_partitioned(spark, out, "avro").count() == 2
 
 
-def test_overwrite_refuses_leftover_moveaside(spark, tmp_path):
-    """r13 review: a leftover ._overwrite_old dir may hold the only
-    good copy of the partition — refuse loudly instead of rmtree'ing
-    it; and reads never pick mangled values out of the move-aside."""
+def _tree_bytes(root: str) -> dict[str, bytes]:
+    """Every file under ``root`` (hidden dirs included) → its bytes."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for fn in files:
+            full = os.path.join(d, fn)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, root)] = fh.read()
+    return out
+
+
+def _staging_dirs(root: str) -> list[str]:
+    return [d for d in os.listdir(root) if d.startswith(".avro-staging-")]
+
+
+def test_staging_leftover_is_invisible_and_blocks_nothing(spark, tmp_path):
+    """A crashed write's ``.avro-staging-*`` tree (new output plus a
+    partition it was replacing) is skipped by every read, and neither
+    an append nor an overwrite trips over it or touches it."""
+    import shutil
+
     from dynamic_partitioner_spark.formats import write_avro_partitioned
     from dynamic_partitioner_spark.sources.read import read_partitioned
 
-    df = spark.createDataFrame([(1, "a")], "id long, p string")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, p string")
     out = str(tmp_path / "t")
     write_avro_partitioned(df, ["p"], out, codec="null")
-    # simulate the crashed prior overwrite
-    os.rename(f"{out}/p=a", f"{out}/p=a._overwrite_old")
-    write_avro_partitioned(df, ["p"], out, codec="null")  # rewrites p=a
-    # the move-aside's rows are INVISIBLE to reads (no 'a._overwrite_old' key)
-    assert {r.p for r in read_partitioned(spark, out, "avro")
-            .collect()} == {"a"}
-    with pytest.raises(RuntimeError, match="crashed mid-swap"):
-        write_avro_partitioned(df, ["p"], out, codec="null",
-                               overwrite_partitions=True)
+    leftover = os.path.join(out, ".avro-staging-0123456789ab")
+    shutil.copytree(f"{out}/p=a", f"{leftover}/p=a")
+    shutil.copytree(f"{out}/p=b", f"{leftover}/replaced/p=b")
+    planted = _tree_bytes(leftover)
+
+    def rows():
+        return sorted((r.id, r.p) for r in
+                      read_partitioned(spark, out, "avro").collect())
+
+    assert rows() == [(1, "a"), (2, "b")]
+    write_avro_partitioned(df, ["p"], out, codec="null")
+    assert rows() == [(1, "a"), (1, "a"), (2, "b"), (2, "b")]
+    write_avro_partitioned(
+        spark.createDataFrame([(3, "a")], "id long, p string"), ["p"],
+        out, codec="null", overwrite_partitions=True)
+    assert rows() == [(2, "b"), (2, "b"), (3, "a")]
+    assert _staging_dirs(out) == [os.path.basename(leftover)]
+    assert _tree_bytes(leftover) == planted
 
 
-def test_overwrite_leftover_validates_before_any_rename(
-        spark, purchase_df, tmp_out):
-    """r15 review pin: the crashed-swap refusal must fire BEFORE any
-    partition is renamed aside — the old single pass stranded
-    already-moved partitions invisible to readers with nothing
-    written."""
-    spec = SinkSpec(name="p", field_names=["purchase_date"], fmt="avro")
-    write_partitioned(purchase_df, spec, tmp_out)
-    dates = sorted({r.purchase_date for r in
-                    purchase_df.select("purchase_date").collect()})
-    assert len(dates) >= 2
-    # plant a leftover for the LAST date so earlier keys would have
-    # been renamed first under the old single-pass order
-    bad = os.path.join(tmp_out, f"purchase_date={dates[-1]}")
-    os.mkdir(bad + "._overwrite_old")
-    with pytest.raises(RuntimeError, match="crashed mid-swap"):
-        write_partitioned(
-            purchase_df,
-            SinkSpec(name="p", field_names=["purchase_date"], fmt="avro",
-                     overwrite_partitions=True), tmp_out)
-    # every live partition is still visible — nothing was moved aside
-    for d in dates:
-        assert os.path.isdir(os.path.join(tmp_out, f"purchase_date={d}"))
-    assert glob.glob(os.path.join(
-        tmp_out, "*._overwrite_old")) == [bad + "._overwrite_old"]
+def test_partition_value_with_old_marker_suffix_round_trips(spark, tmp_path):
+    """No partition value is reserved: one ending in '._overwrite_old'
+    (the suffix an earlier move-aside overwrite scheme claimed) writes,
+    reads back, and survives an overwrite of its sibling value."""
+    from dynamic_partitioner_spark.formats import write_avro_partitioned
+    from dynamic_partitioner_spark.sources.read import read_partitioned
+
+    df = spark.createDataFrame([(1, "x"), (2, "x._overwrite_old")],
+                               "id long, p string")
+    out = str(tmp_path / "t")
+    write_avro_partitioned(df, ["p"], out, codec="null")
+    write_avro_partitioned(
+        spark.createDataFrame([(3, "x")], "id long, p string"), ["p"],
+        out, codec="null", overwrite_partitions=True)
+    got = sorted((r.id, r.p) for r in
+                 read_partitioned(spark, out, "avro").collect())
+    assert got == [(2, "x._overwrite_old"), (3, "x")]
 
 
-def test_partition_value_colliding_with_marker_refuses(spark, tmp_path):
-    """r15 review pin: a VALUE whose directory ends in
-    '._overwrite_old' would be invisible to every read (the listing
-    filters the marker) and spuriously refuse sibling overwrites —
-    the writer rejects it loudly."""
-    from dynamic_partitioner_spark.formats.avro_py import (
-        write_avro_partitioned)
-    df = spark.createDataFrame([(1, "x._overwrite_old")], "id long, p string")
-    with pytest.raises(Exception, match="reserved overwrite marker"):
-        write_avro_partitioned(df, ["p"], str(tmp_path / "t"))
+def test_failed_overwrite_leaves_live_tree_untouched(spark, tmp_path,
+                                                     monkeypatch):
+    """A failed overwrite job wrote only into its staging tree: every
+    live file is byte-identical afterwards and the staging tree is
+    gone."""
+    from dynamic_partitioner_spark.formats import avro_py as A
+
+    out = str(tmp_path / "t")
+    A.write_avro_partitioned(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, p string"),
+        ["p"], out, codec="null")
+    before = _tree_bytes(out)
+    real_encode = A.encode_container
+
+    def sometimes_boom(rows, schema, sync, codec="deflate", **kw):
+        rows = list(rows)
+        if any(r[0] == 20 for r in rows):
+            raise RuntimeError("task boom")
+        return real_encode(iter(rows), schema, sync, codec, **kw)
+    monkeypatch.setattr(A, "encode_container", sometimes_boom)
+    with pytest.raises(Exception):
+        A.write_avro_partitioned(
+            spark.createDataFrame([(10, "a"), (20, "b"), (30, "c")],
+                                  "id long, p string"),
+            ["p"], out, codec="null", overwrite_partitions=True)
+    monkeypatch.undo()
+    assert _tree_bytes(out) == before
+    assert _staging_dirs(out) == []
 
 
-def test_overwrite_reconciliation_restores_and_flags(spark, tmp_path):
-    """r15 review pin for the nondeterministic-input reconciliation
-    (unit level — the branches need the key scan and the write job to
-    disagree, which a deterministic DataFrame never does): a key that
-    VANISHED between scan and write gets its live copy restored
-    (never deleted); a key that APPEARED on top of pre-existing files
-    raises with both generations intact; a genuinely replaced key's
-    move-aside copy is deleted."""
-    import shutil
+def test_avro_overwrite_runs_same_jobs_as_append(spark, tmp_path):
+    """The overwrite commit is driver-side file moves: it launches no
+    Spark job beyond the write an append of the same frame runs."""
+    from dynamic_partitioner_spark.formats import write_avro_partitioned
 
-    from dynamic_partitioner_spark.formats.avro_py import (
-        _reconcile_overwrite)
-    root = str(tmp_path / "t")
-    # replaced partition: moved aside + rewritten by this job
-    os.makedirs(os.path.join(root, "p=a._overwrite_old"))
-    os.makedirs(os.path.join(root, "p=a"))
-    open(os.path.join(root, "p=a", "part-x-tok1.avro"), "w").close()
-    # vanished partition: moved aside, nothing written
-    os.makedirs(os.path.join(root, "p=b._overwrite_old"))
-    open(os.path.join(root, "p=b._overwrite_old", "part-old.avro"),
-         "w").close()
-    moved = [(os.path.join(root, "p=a"),
-              os.path.join(root, "p=a._overwrite_old")),
-             (os.path.join(root, "p=b"),
-              os.path.join(root, "p=b._overwrite_old"))]
-    _reconcile_overwrite(root, moved, {"p=a", "p=b"}, {"p=a"}, "tok1")
-    assert os.path.isdir(os.path.join(root, "p=b"))          # restored
-    assert not os.path.isdir(os.path.join(root, "p=b._overwrite_old"))
-    assert not os.path.isdir(os.path.join(root, "p=a._overwrite_old"))
-    # vanished key whose target holds ONLY this job's debris (a
-    # failed/speculative attempt ran write_group before the retry
-    # re-evaluated the key away): debris cleared, live copy restored
-    os.makedirs(os.path.join(root, "p=d._overwrite_old"))
-    open(os.path.join(root, "p=d._overwrite_old", "part-live.avro"),
-         "w").close()
-    os.makedirs(os.path.join(root, "p=d"))
-    open(os.path.join(root, "p=d", "part-z-tok1.avro"), "w").close()
-    _reconcile_overwrite(
-        root, [(os.path.join(root, "p=d"),
-                os.path.join(root, "p=d._overwrite_old"))],
-        {"p=d"}, set(), "tok1")
-    assert os.path.exists(os.path.join(root, "p=d", "part-live.avro"))
-    assert not os.path.exists(os.path.join(root, "p=d", "part-z-tok1.avro"))
-    # ... but FOREIGN files in the target refuse loudly, both kept
-    os.makedirs(os.path.join(root, "p=e._overwrite_old"))
-    os.makedirs(os.path.join(root, "p=e"))
-    open(os.path.join(root, "p=e", "part-foreign.avro"), "w").close()
-    with pytest.raises(RuntimeError, match="cannot restore"):
-        _reconcile_overwrite(
-            root, [(os.path.join(root, "p=e"),
-                    os.path.join(root, "p=e._overwrite_old"))],
-            {"p=e"}, set(), "tok1")
-    assert os.path.isdir(os.path.join(root, "p=e._overwrite_old"))
-    # appeared partition on top of pre-existing files -> loud, AND the
-    # verified-replaced partition's move-aside is deleted BEFORE the
-    # raise (its replacement is consistent; leaving the old copy
-    # would refuse every later overwrite as a crashed swap)
-    shutil.rmtree(root)
-    os.makedirs(os.path.join(root, "p=c"))
-    open(os.path.join(root, "p=c", "part-stale.avro"), "w").close()
-    open(os.path.join(root, "p=c", "part-y-tok2.avro"), "w").close()
-    os.makedirs(os.path.join(root, "p=f._overwrite_old"))
-    os.makedirs(os.path.join(root, "p=f"))
-    open(os.path.join(root, "p=f", "part-w-tok2.avro"), "w").close()
-    with pytest.raises(RuntimeError, match="absent from the pre-write"):
-        _reconcile_overwrite(
-            root, [(os.path.join(root, "p=f"),
-                    os.path.join(root, "p=f._overwrite_old"))],
-            {"p=f"}, {"p=c", "p=f"}, "tok2")
-    assert os.path.exists(os.path.join(root, "p=c", "part-stale.avro"))
-    assert not os.path.isdir(os.path.join(root, "p=f._overwrite_old"))
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "b")],
+                               "id long, p string")
+    out = str(tmp_path / "t")
+
+    def jobs(group: str, overwrite: bool) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            write_avro_partitioned(df, ["p"], out, codec="null",
+                                   overwrite_partitions=overwrite)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_append = jobs("avro-jobs-append", False)
+    n_overwrite = jobs("avro-jobs-overwrite", True)
+    assert n_append >= 1
+    assert n_overwrite == n_append
 
 
 def test_avro_rejects_invalid_field_names(spark, tmp_path):

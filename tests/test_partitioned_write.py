@@ -738,16 +738,27 @@ def test_overwrite_mode_conf_is_restored(spark, tmp_path):
         write_partitioned)
     from dynamic_partitioner_spark.spec import SinkSpec
 
+    from dynamic_partitioner_spark.sources.read import read_partitioned
+
     conf = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(conf)
     spark.conf.set(conf, "static")
     try:
-        df = spark.createDataFrame([(1, "a")], "id long, k string")
+        out = str(tmp_path / "w")
+        write_partitioned(
+            spark.createDataFrame([(1, "a"), (2, "b")], "id long, k string"),
+            SinkSpec(name="t", field_names=["k"],
+                     append_to_partition="CREATE_OR_APPEND"), out)
+        df = spark.createDataFrame([(3, "a")], "id long, k string")
         write_partitioned(
             df, SinkSpec(name="t", field_names=["k"],
-                         overwrite_partitions=True),
-            str(tmp_path / "w"))
-        assert spark.conf.get(conf) == "static"   # restored, not leaked
+                         overwrite_partitions=True), out)
+        assert spark.conf.get(conf) == "static"   # session conf untouched
+        # a static session would have wiped k=b; the per-write option
+        # replaces only the incoming partition
+        got = sorted((r.id, r.k) for r in
+                     read_partitioned(spark, out).collect())
+        assert got == [(2, "b"), (3, "a")]
     finally:
         spark.conf.set(conf, prev)
 

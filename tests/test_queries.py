@@ -45,9 +45,6 @@ def test_approx_percentiles_rank_error_bound(spark):
     true rank must lie within ~accuracy⁻¹ of the requested quantile
     (value-space gaps can be large in sparse tails, so that is the
     wrong thing to pin)."""
-    import sys
-    sys.path.insert(0, "/root/repo")
-
     import __spark_entry__ as E
 
     from pyspark.sql import functions as F
@@ -103,7 +100,7 @@ def test_hll_mergeable_sketches_union_equals_direct(spark):
     import sys
 
     spec = importlib.util.spec_from_file_location(
-        "entry_mod_hll", "/root/repo/__spark_entry__.py")
+        "entry_mod_hll", E.__file__)
     m = importlib.util.module_from_spec(spec)
     sys.modules["entry_mod_hll"] = m
     spec.loader.exec_module(m)

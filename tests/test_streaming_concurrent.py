@@ -5,6 +5,7 @@ must both complete and produce exactly the single-threaded result."""
 
 from __future__ import annotations
 
+import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 
@@ -18,7 +19,8 @@ from dynamic_partitioner_spark.streaming.write import (
     stream_write_partitioned)
 
 SF_DIR = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/tests/concurrent"
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       ".scratch", "tests", "concurrent")
 
 
 def _dirs(*names: str) -> list[str]:

@@ -51,8 +51,10 @@ import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 REPLICAS = 10
-SRC = "/root/repo/.scratch/sf1"
+SRC = os.path.join(REPO, ".scratch", "sf1")
 
 
 def assert_single_space_tokens(con) -> None:
@@ -79,7 +81,8 @@ def assert_single_space_tokens(con) -> None:
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf10"
+    out = (sys.argv[1] if len(sys.argv) > 1
+           else os.path.join(REPO, ".scratch", "sf10"))
     if not os.path.exists(f"{SRC}/documents.parquet"):
         sys.exit("build the sf1 corpus first: python tools/make_sf1.py")
     os.makedirs(out, exist_ok=True)
